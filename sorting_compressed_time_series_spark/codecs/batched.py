@@ -49,22 +49,6 @@ _HDR = 8  # magic(2) + version(1) + codec(1) + count(u32)
 _CLASS_WIDTH_U8 = CLASS_WIDTH.astype(np.uint8)
 
 
-def _block_copy(
-    out: np.ndarray,
-    dest_starts: np.ndarray,
-    src: np.ndarray,
-    src_starts: np.ndarray,
-    lengths: np.ndarray,
-) -> None:
-    """Vectorized multi-block memcpy: out[dest+i] = src[src+i] for each block."""
-    total = int(lengths.sum())
-    if total == 0:
-        return
-    ends = np.cumsum(lengths)
-    intra = np.arange(total, dtype=np.int64) - np.repeat(ends - lengths, lengths)
-    out[np.repeat(dest_starts, lengths) + intra] = src[np.repeat(src_starts, lengths) + intra]
-
-
 def _block_place(
     out: np.ndarray,
     dest_starts: np.ndarray,

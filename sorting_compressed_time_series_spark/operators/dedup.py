@@ -25,7 +25,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 NORMALIZE = "lower(regexp_replace(trim(text), '\\\\s+', ' '))"
 
@@ -65,13 +65,6 @@ def minhash_perm_constants(num_perm: int) -> list[tuple[int, int]]:
         )
         for i in range(num_perm)
     ]
-
-
-def md5_u32(col, offset: int = 1) -> Column:
-    """First (or ``offset``-th) 8 hex chars of md5 as a non-negative bigint —
-    the portable 32-bit base hash (DuckDB twin:
-    ``CAST('0x' || substr(md5(x), offset, 8) AS BIGINT)``)."""
-    return F.conv(F.substring(F.md5(col), offset, 8), 16, 10).cast("long")
 
 
 def normalized(docs: DataFrame) -> DataFrame:

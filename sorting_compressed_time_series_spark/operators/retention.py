@@ -5,7 +5,8 @@ write-path check DataRegion.java:866-872, file-level expiry
 DataRegion.java:1623-1637): rows older than now-ttl are rejected at ingest
 and expired storage is dropped wholesale.
 
-Spark expression: (a) an ingest-time filter, (b) a per-tier partition drop —
+Spark expression: (a) an ingest-time filter (the ``ttl_filter`` registry
+query), (b) a per-tier partition drop —
 retention rewrites only the manifest-visible partition set, realized here as
 ``filter(p_day >= cutoff_day)`` + snapshot rewrite; with Iceberg this is a
 metadata-only ``DELETE WHERE p_day < cutoff``. Coarser tiers get longer
@@ -14,14 +15,7 @@ rollups live long)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-
 from ..sources.warehouse import US_PER_DAY, Warehouse
-
-
-def ingest_ttl_filter(df: DataFrame, now_us: int, ttl_us: int, ts_col: str = "max_ts") -> DataFrame:
-    """Reject points/chunks older than the write-path TTL."""
-    return df.filter(F.col(ts_col) >= F.lit(now_us - ttl_us))
 
 
 def apply_retention(

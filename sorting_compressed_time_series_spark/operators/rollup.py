@@ -7,13 +7,15 @@ AggrWindowIterator.java:30-33) — with the accumulator set
 count/sum/min/max/avg/first/last (reference execution/aggregation/*).
 
 Physical design (the SeriesAggregationScanOperator idea made structural,
-SURVEY.md §2.5): tier-1 partials are computed INSIDE the decode kernel —
-per (chunk, window) via ``np.*.reduceat`` on the decoded arrays — so the
-shuffle that follows carries one row per (doc, window), not one per point.
-Catalyst then runs partial/final aggregation on top for chunks that split
-a window. Tiers ≥ 2 never touch points or Python: they are pure
-DataFrame ``groupBy`` over the next-finer tier, and every aggregate
-composes (sum of sums, min of mins, first by earliest first_ts, ...).
+SURVEY.md §2.5): ``rollup_tiers`` decodes each chunk ONCE and computes the
+per-(chunk, window) partials of EVERY tier inside the decode kernel via
+``np.*.reduceat`` on the decoded arrays, so the shuffle that follows
+carries one row per (tier, doc, window), not one per point. Catalyst then
+runs partial/final aggregation on top for docs with several chunks.
+Every aggregate composes (sum of sums, min of mins, first by earliest
+first_ts, ...), which is what ``promote`` (tier k → coarser window, a pure
+DataFrame ``groupBy``) relies on; it is exact only when the coarser
+window is a multiple of the finer one.
 
 Windows fully covered by a chunk can be answered from chunk statistics
 alone (`rollup_from_stats`) without decoding any blob.
@@ -33,13 +35,6 @@ from ..codecs.batched import decode_rows
 WINDOW_1M_US = 60_000_000
 WINDOW_1H_US = 3_600_000_000
 WINDOW_1D_US = 86_400_000_000
-
-TIER_PARTIAL_SCHEMA = (
-    "doc_id string, source string, window_start bigint, cnt bigint, "
-    "sum_v bigint, min_v bigint, max_v bigint, "
-    "first_ts bigint, first_v bigint, last_ts bigint, last_v bigint"
-)
-
 
 def _blob_np(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """Binary array -> (data uint8, splits int64) without per-row copies."""
@@ -81,49 +76,6 @@ def decode_points(chunks_df: DataFrame) -> DataFrame:
     )
 
 
-def _window_partials_kernel(window_us: int):
-    def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tbuf, tsp = _blob_np(batch.column("time_blob"))
-            vbuf, vsp = _blob_np(batch.column("value_blob"))
-            ts, splits = decode_rows(tbuf, tsp)
-            vals, _ = decode_rows(vbuf, vsp)
-            counts = np.diff(splits)
-            if len(ts) == 0:
-                continue
-            win = ts // window_us * window_us
-            row_of = np.repeat(np.arange(batch.num_rows, dtype=np.int64), counts)
-            change = np.empty(len(win), dtype=bool)
-            change[0] = True
-            np.logical_or(win[1:] != win[:-1], row_of[1:] != row_of[:-1], out=change[1:])
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(win))
-            grp_idx = pa.array(row_of[starts])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id").take(grp_idx),
-                    batch.column("source").take(grp_idx),
-                    pa.array(win[starts]),
-                    pa.array(ends - starts),
-                    pa.array(np.add.reduceat(vals, starts)),
-                    pa.array(np.minimum.reduceat(vals, starts)),
-                    pa.array(np.maximum.reduceat(vals, starts)),
-                    pa.array(ts[starts]),
-                    pa.array(vals[starts]),
-                    pa.array(ts[ends - 1]),
-                    pa.array(vals[ends - 1]),
-                ],
-                names=[
-                    "doc_id", "source", "window_start", "cnt", "sum_v",
-                    "min_v", "max_v", "first_ts", "first_v", "last_ts", "last_v",
-                ],
-            )
-
-    return kern
-
-
 def _finalize(partials: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
     """Merge partials across chunks of the same (doc, window) — Catalyst
     plans this as partial+final HashAggregate, map-side combined."""
@@ -139,46 +91,11 @@ def _finalize(partials: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFram
     )
 
 
-def rollup_tier1(chunks_df: DataFrame, window_us: int = WINDOW_1M_US,
-                 unique_doc_chunks: bool = False) -> DataFrame:
-    """tier0 chunks → tier1 windowed aggregates (decode happens here, once).
-
-    ``unique_doc_chunks=True`` asserts every doc has exactly ONE chunk row
-    (true for the output of a single flush, before any append/compaction):
-    the kernel's per-(chunk, window) partials are then already final — the
-    cross-chunk merge exchange is provably redundant and is skipped, so the
-    tier-1 write runs at decode parallelism with no shuffle at all."""
-    src = chunks_df.select("doc_id", "source", "time_blob", "value_blob")
-    partials = src.mapInArrow(_window_partials_kernel(window_us), schema=TIER_PARTIAL_SCHEMA)
-    if unique_doc_chunks:
-        return partials
-    return _finalize(partials)
-
-
-def tier1_from_flush(flush_df: DataFrame) -> DataFrame:
-    """Tier-1 from the partial rows the flush kernel co-emitted (tier = -1):
-    no decode, no Python — one groupBy over pre-reduced rows. This is the
-    fast path when ingest ran with ``partial_window_us``."""
-    partials = flush_df.filter(F.col("tier") == -1).select(
-        "doc_id",
-        "source",
-        "window_start",
-        F.col("count").cast("bigint").alias("cnt"),
-        "sum_v",
-        "min_v",
-        "max_v",
-        F.col("min_ts").alias("first_ts"),
-        "first_v",
-        F.col("max_ts").alias("last_ts"),
-        "last_v",
-    )
-    return _finalize(partials)
-
-
 def promote(tier_df: DataFrame, coarser_window_us: int) -> DataFrame:
-    """tier k → tier k+1: pure DataFrame over pre-aggregated rows.
-    No Python, no decode — this is the cheap cascade that makes multi-tier
-    downsampling nearly free at 100 TB (each tier is ~window-ratio smaller)."""
+    """tier k → tier k+1: pure DataFrame over pre-aggregated rows, no
+    Python, no decode. Exact only when ``coarser_window_us`` is a multiple
+    of the finer tier's window: a finer window that straddles a coarser
+    boundary lands whole in the earlier coarser window."""
     # exact integer bucketing (epoch-µs exceeds 2^53; see windows.tumbling)
     regrouped = tier_df.withColumn(
         "window_start",
@@ -210,18 +127,20 @@ def rollup_from_stats(chunks_df: DataFrame) -> DataFrame:
 # fused multi-tier rollup: every tier from ONE decode pass, ONE job
 # ---------------------------------------------------------------------------
 
-TIERS_PARTIAL_SCHEMA = "tier int, " + TIER_PARTIAL_SCHEMA
+TIERS_PARTIAL_SCHEMA = (
+    "tier int, doc_id string, source string, window_start bigint, cnt bigint, "
+    "sum_v bigint, min_v bigint, max_v bigint, "
+    "first_ts bigint, first_v bigint, last_ts bigint, last_v bigint"
+)
 
 
-def _multi_window_partials_kernel(windows_us: list[int]):
+def _tiers_partials_kernel(windows_us: list[int]):
     """Decode each chunk ONCE, then emit per-(chunk, window) partials for
     EVERY tier granularity from the same decoded arrays — the per-tier
     boundary scan + ``np.*.reduceat`` is a tiny fraction of the decode cost,
     so the marginal price of a coarser tier is ~zero.  With one chunk per
     doc the partials are final and the fused rollup is a single map-only
-    write (no exchange, no per-tier job): the promote() cascade's two extra
-    write+read-back jobs — the main NON-scaling wall component at high
-    parallelism — disappear."""
+    write (no exchange, no per-tier job)."""
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -321,12 +240,18 @@ def _multi_window_partials_kernel(windows_us: list[int]):
 def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
                  unique_doc_chunks: bool = False) -> DataFrame:
     """All retention tiers in ONE pass/job: rows carry ``tier`` = index into
-    ``windows_us``.  Equivalent to ``rollup_tier1`` + a ``promote()``
-    cascade (pytest-asserted), but with one decode, one (or zero) exchange
-    and one write instead of a write+read-back per tier."""
+    ``windows_us``.  Every tier is exact against the raw points for any
+    windows (nested or not); for nested windows it equals a single-window
+    rollup + ``promote()`` cascade (pytest-asserted), with one decode and
+    one (or zero) exchange.
+
+    ``unique_doc_chunks=True`` asserts every doc has exactly ONE chunk row
+    (true for the output of a single flush, before any append/compaction):
+    the kernel's per-(chunk, window) partials are then already final and
+    the cross-chunk merge exchange is skipped."""
     src = chunks_df.select("doc_id", "source", "time_blob", "value_blob")
     partials = src.mapInArrow(
-        _multi_window_partials_kernel(windows_us), schema=TIERS_PARTIAL_SCHEMA
+        _tiers_partials_kernel(windows_us), schema=TIERS_PARTIAL_SCHEMA
     )
     if unique_doc_chunks:
         return partials

@@ -14,21 +14,14 @@ checkpoint-resume oracle in tests/test_warehouse_promotion.py).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.ingest import flush
 from ..operators.retention import apply_retention
-from ..operators.rollup import (
-    WINDOW_1H_US,
-    WINDOW_1M_US,
-    promote,
-    rollup_tier1,
-    rollup_tiers,
-    tier1_from_flush,
-)
+from ..operators.rollup import WINDOW_1H_US, WINDOW_1M_US, rollup_tiers
 from ..sources.warehouse import Warehouse, with_p_day
 
 
@@ -54,12 +47,6 @@ class Pipeline:
     spark: SparkSession
     warehouse: Warehouse
     tiers: list[TierSpec] = field(default_factory=lambda: list(DEFAULT_TIERS))
-    # co-emit tier-1 partial rows (tier = -1) at flush so promotion never
-    # decodes a blob. OFF by default: the partials are a tier1-sized side
-    # table riding every chunk write (~5× the blob bytes at a 1s tier), and
-    # the decode-based tier1 (`rollup_tier1`) is vectorized CPU that scales
-    # with cores while the extra write IO does not.
-    emit_partials: bool = False
     # hash-bucket count for the chunk table (Iceberg ``bucket(doc_id, N)``
     # stand-in): snapshots are written hash-clustered by doc_id so that
     # same-session compaction / per-doc merges read the clustering from the
@@ -70,10 +57,7 @@ class Pipeline:
     # --- stage 1: ingest+flush ------------------------------------------
     def ingest(self, tokens_df: DataFrame, seed: int = 42,
                partitions: int | None = None, append: bool = False) -> DataFrame:
-        chunks = flush(tokens_df, seed, partitions,
-                       partial_window_us=self.tiers[0].window_us
-                       if self.emit_partials else None)
-        chunks = with_p_day(chunks, "window_start")
+        chunks = with_p_day(flush(tokens_df, seed, partitions), "window_start")
         if append and self.warehouse.exists("chunks_tier0"):
             # manifest-add only: the existing snapshot is untouched and the
             # next promotion MERGEs just the appended docs' windows
@@ -88,175 +72,126 @@ class Pipeline:
     # --- stage 2: promotion with checkpoint ------------------------------
     def promote_all(self, up_to_us: int | None = None,
                     collect_stats: bool = False) -> list[dict]:
-        """Promote each tier up to its source's complete windows.
+        """Promote every tier up to its complete windows with ONE decode
+        and ONE write.
 
-        Three regimes per tier, all deterministic and idempotent:
+        Each tier's horizon ``complete`` is the end of its last complete
+        window; its watermark ``lo`` is where the previous run stopped.
+        Four modes per tier, all deterministic and idempotent:
+        - **noop**: ``lo >= complete`` and no appends are pending;
         - **full** (no watermark yet): compute every window;
-        - **incremental** (watermark advance): keep rows below the
-          watermark, compute only [watermark, complete) from the finer
-          source filtered to that range (exact — a window's inputs all
-          carry window_start ≥ watermark);
-        - **merge** (pending appended segments): additionally recompute the
-          windows of JUST the appended docs below the watermark and splice
-          them over the kept rows (anti-join) — appends never trigger a
-          full recompute (the reference's compaction-then-requery shape;
-          per-key MERGE INTO on Iceberg).
+        - **incremental** (watermark advance): keep the rows below ``lo``
+          and compute [lo, complete);
+        - **merge** (pending appended segments): additionally recompute
+          the windows below ``lo`` of JUST the appended ("dirty") docs and
+          splice them over the kept rows (anti-join) — appends never
+          trigger a full recompute (per-key MERGE INTO on Iceberg).
+
+        Every promoted tier comes out of one ``rollup_tiers`` pass over the
+        tier-0 chunks. The pass reads every chunk if some tier is full;
+        otherwise only the chunks with ``max_ts`` ≥ the smallest ``lo``
+        (a window at or past a watermark only has points from those) plus
+        every chunk of a dirty doc, each chunk once. One predicate per tier
+        then keeps its fresh rows:
+        full ``window_start < complete``; incremental
+        ``lo <= window_start < complete``; merge, the incremental range OR
+        (dirty doc AND ``window_start < lo``). The kept old rows are unioned
+        in and ``Warehouse.write_slices`` commits every promoted tier from
+        the one write. Pending appends are cleared only after every tier
+        has committed, so a rerun after a crash between the per-tier
+        commits finishes the job (committed tiers are noop or re-merge).
 
         Returns a per-tier summary; with ``collect_stats`` it includes
         recomputed/kept row counts (extra count jobs — tests only)."""
         wh = self.warehouse
         chunks = wh.read(self.spark, "chunks_tier0")
-        data_max = chunks.filter(F.col("tier") == 0).agg(F.max("max_ts")).collect()[0][0]
+        data_max = chunks.agg(F.max("max_ts")).collect()[0][0]
         pending = wh.pending_appends("chunks_tier0")
         dirty = None
         if pending:
-            seg = wh.read_segment(self.spark, "chunks_tier0", pending[0])
-            for s in pending[1:]:
-                seg = seg.unionByName(wh.read_segment(self.spark, "chunks_tier0", s))
-            dirty = seg.filter(F.col("tier") == 0).select("doc_id").distinct()
-        has_partials = chunks.filter(F.col("tier") == -1).limit(1).count() > 0
-        if has_partials and pending:
-            # the decode path is always correct; the partials fast path is
-            # only safe if the appended segments carried partials too
-            seg_partials = seg.filter(F.col("tier") == -1).limit(1).count() > 0
-            has_partials = has_partials and seg_partials
-
-        def tier1_fresh(src):
-            if has_partials:
-                return tier1_from_flush(src)
-            return rollup_tier1(src.filter(F.col("tier") == 0), self.tiers[0].window_us)
-
-        # Fused full-mode fast path: no tier has a watermark yet and no
-        # appends are pending → every tier is a fresh computation over the
-        # same points, so one rollup_tiers() decode job can feed all of
-        # them. Requires nested windows (each coarser tier an integer
-        # multiple of the finer) for direct-from-points ≡ cascade equality.
-        nested = all(
-            self.tiers[j + 1].window_us % self.tiers[j].window_us == 0
-            for j in range(len(self.tiers) - 1)
-        )
-        if (
-            not pending
-            and nested
-            and len(self.tiers) > 1
-            and not os.environ.get("SPARK_GRAFT_NO_FUSED_PROMOTE")
-            and all(wh.watermark(spec.name) is None for spec in self.tiers)
-        ):
-            return self._promote_all_fused(chunks, data_max, up_to_us, collect_stats)
+            seg = reduce(DataFrame.unionByName, [
+                wh.read_segment(self.spark, "chunks_tier0", s) for s in pending])
+            dirty = F.broadcast(
+                seg.select("doc_id").distinct().withColumn("dirty", F.lit(True)))
 
         summary: list[dict] = []
-        prev_df = None
-        for i, spec in enumerate(self.tiers):
+        todo = []  # (spec, mode, lo, complete, summary entry) per promoted tier
+        for spec in self.tiers:
             if up_to_us is None:
                 # final batch run: every window is complete (data is closed)
                 complete = (data_max // spec.window_us + 1) * spec.window_us
             else:
                 # incremental run: only windows fully below the horizon
                 complete = (min(up_to_us, data_max) // spec.window_us) * spec.window_us
-            already = wh.watermark(spec.name)
-            if already is not None and already >= complete and not pending:
-                prev_df = wh.read(self.spark, spec.name)
+            lo = wh.watermark(spec.name)
+            if lo is None:
+                mode = "full"
+            elif lo >= complete and not pending:
                 summary.append({"tier": spec.name, "mode": "noop"})
                 continue
-            source = chunks if i == 0 else prev_df
-            fresh_of = tier1_fresh if i == 0 else (
-                lambda src, w=spec.window_us: promote(src, w)
-            )
-            win = F.col("window_start")
-            new_wm = int(complete)
-            if already is None:
-                out = fresh_of(source).filter(win < F.lit(complete))
-                mode = "full"
-                stats_dfs = {"recomputed": out}
             else:
-                lo = int(already)
+                mode = "merge" if pending else "incremental"
+            entry = {"tier": spec.name, "mode": mode, "watermark_us": int(complete)}
+            summary.append(entry)
+            todo.append((spec, mode, lo, int(complete), entry))
+        if not todo:
+            return summary
+
+        win = F.col("window_start")
+        is_dirty = F.col("dirty").isNotNull()
+        src = chunks
+        los = [lo for _, _, lo, _, _ in todo]
+        if None not in los:  # no full tier: skip chunks wholly below every lo
+            lo_min = min(los)
+            if dirty is None:
+                src = src.filter(F.col("max_ts") >= F.lit(lo_min))
+            else:
+                src = src.join(dirty, "doc_id", "left").filter(
+                    (F.col("max_ts") >= F.lit(lo_min)) | is_dirty)
+        fresh = rollup_tiers(src, [spec.window_us for spec, *_ in todo])
+        if dirty is not None:
+            fresh = fresh.join(dirty, "doc_id", "left")
+        keep = None  # CASE tier WHEN t THEN <tier t's predicate> ...
+        for t, (_, mode, lo, complete, _) in enumerate(todo):
+            cond = win < F.lit(complete)
+            if lo is not None:
+                cond = cond & (win >= F.lit(lo))
+            if mode == "merge":
+                cond = cond | (is_dirty & (win < F.lit(lo)))
+            is_t = F.col("tier") == t
+            keep = F.when(is_t, cond) if keep is None else keep.when(is_t, cond)
+        fresh = fresh.filter(keep).drop("dirty")
+
+        out = fresh
+        watermarks = {}
+        for t, (spec, mode, lo, complete, entry) in enumerate(todo):
+            mine = fresh.filter(F.col("tier") == t)
+            if lo is None:
+                watermarks[t] = complete
+                stats_dfs = {"recomputed": mine}
+            else:
                 # an append of old-only data can leave complete < watermark;
                 # never regress the checkpoint
-                new_wm = max(new_wm, lo)
+                watermarks[t] = max(complete, lo)
                 old = wh.read(self.spark, spec.name).drop("p_day").filter(win < F.lit(lo))
-                # tail: windows in [lo, complete) — the finer source rows
-                # that can contribute all carry window_start/min-ts ≥ lo
-                if i == 0:
-                    tail_src = chunks.filter(
-                        F.col("window_start") >= F.lit(lo)
-                        if has_partials
-                        else (F.col("tier") == 0) & (F.col("max_ts") >= F.lit(lo))
-                    )
+                if mode == "merge":
+                    old = old.join(dirty, "doc_id", "left_anti")
+                    stats_dfs = {"kept": old,
+                                 "recomputed_dirty": mine.filter(win < F.lit(lo)),
+                                 "recomputed_tail": mine.filter(win >= F.lit(lo))}
                 else:
-                    tail_src = prev_df.filter(win >= F.lit(lo))
-                fresh_tail = fresh_of(tail_src).filter(
-                    (win >= F.lit(lo)) & (win < F.lit(complete))
-                )
-                if dirty is not None:
-                    kept = old.join(F.broadcast(dirty), "doc_id", "left_anti")
-                    dirty_src = source.join(F.broadcast(dirty), "doc_id", "left_semi")
-                    fresh_dirty = fresh_of(dirty_src).filter(win < F.lit(lo))
-                    out = kept.unionByName(fresh_dirty).unionByName(fresh_tail)
-                    mode = "merge"
-                    stats_dfs = {"kept": kept, "recomputed_dirty": fresh_dirty,
-                                 "recomputed_tail": fresh_tail}
-                else:
-                    out = old.unionByName(fresh_tail)
-                    mode = "incremental"
-                    stats_dfs = {"kept": old, "recomputed": fresh_tail}
-            entry = {"tier": spec.name, "mode": mode, "watermark_us": int(complete)}
+                    stats_dfs = {"kept": old, "recomputed": mine}
+                out = out.unionByName(old.withColumn("tier", F.lit(t)))
             if collect_stats:
                 # count BEFORE the write: the commit retires the old
                 # snapshot these frames still read from
                 entry.update({k: df.count() for k, df in stats_dfs.items()})
-            wh.write(with_p_day(out), spec.name, partition_by=("p_day",),
-                     watermark_us=new_wm, op=f"promote@{new_wm}:{mode}")
-            prev_df = wh.read(self.spark, spec.name)
-            summary.append(entry)
+        wh.write_slices(with_p_day(out), "tier",
+                        {t: spec.name for t, (spec, *_) in enumerate(todo)},
+                        partition_by=("p_day",), watermarks=watermarks,
+                        op="promote")
         if pending:
             wh.clear_pending("chunks_tier0")
-        return summary
-
-    def _promote_all_fused(self, chunks: DataFrame, data_max: int,
-                           up_to_us: int | None,
-                           collect_stats: bool) -> list[dict]:
-        """All-tiers-fresh promotion as ONE decode job and ONE write job.
-
-        The per-tier cascade costs a write + read-back per tier (a fixed
-        ~0.5 s/job wall that does NOT shrink with cores — the dominant
-        non-scaling component measured in BENCH.md). Here the fused
-        ``rollup_tiers`` kernel decodes every chunk once and emits every
-        tier's partials together; one write lands them partitioned by
-        ``(tier, p_day)`` and ``Warehouse.write_slices`` renames each
-        tier's partition dir into that tier table's snapshot (filesystem
-        moves + per-table manifest swaps, no extra jobs). Same shape the
-        bench headline uses; pytest asserts fused ≡ cascade outputs."""
-        wh = self.warehouse
-        completes: list[int] = []
-        for spec in self.tiers:
-            if up_to_us is None:
-                completes.append((data_max // spec.window_us + 1) * spec.window_us)
-            else:
-                completes.append(
-                    (min(up_to_us, data_max) // spec.window_us) * spec.window_us
-                )
-        # per-tier horizon applied inside the one fused frame
-        horizon = F.when(F.col("tier") == 0, F.lit(int(completes[0])))
-        for t in range(1, len(self.tiers)):
-            horizon = horizon.when(F.col("tier") == t, F.lit(int(completes[t])))
-        fused = rollup_tiers(
-            chunks.filter(F.col("tier") == 0),
-            [spec.window_us for spec in self.tiers],
-        ).filter(F.col("window_start") < horizon)
-        wh.write_slices(
-            with_p_day(fused), "tier",
-            {t: spec.name for t, spec in enumerate(self.tiers)},
-            partition_by=("p_day",),
-            watermarks={t: int(c) for t, c in enumerate(completes)},
-            op="promote:full-fused",
-        )
-        summary = []
-        for t, spec in enumerate(self.tiers):
-            entry = {"tier": spec.name, "mode": "full",
-                     "watermark_us": int(completes[t])}
-            if collect_stats:
-                entry["recomputed"] = wh.read(self.spark, spec.name).count()
-            summary.append(entry)
         return summary
 
     # --- maintenance: compaction ------------------------------------------
@@ -276,22 +211,18 @@ class Pipeline:
         if wh.pending_appends("chunks_tier0"):
             raise ValueError("promote_all() before compact(): pending appends")
         chunks = wh.read(self.spark, "chunks_tier0")
-        t0 = chunks.filter(F.col("tier") == 0)
         multi = (
-            t0.groupBy("doc_id").count()
+            chunks.groupBy("doc_id").count()
             .filter(F.col("count") >= min_chunks)
             .select("doc_id")
         )
         n_multi = multi.count()
         if n_multi == 0:
             return {"compacted_docs": 0}
-        merged = compact_chunks(t0.join(F.broadcast(multi), "doc_id", "left_semi"))
-        # keep: single-chunk docs' tier-0 rows untouched, and ALL tier=-1
-        # partial rows (they are per (doc, window) aggregates of the same
-        # points — still valid after the merge)
-        singles = t0.drop("p_day").join(F.broadcast(multi), "doc_id", "left_anti")
-        partials = chunks.drop("p_day").filter(F.col("tier") == -1)
-        out = singles.unionByName(merged).unionByName(partials)
+        merged = compact_chunks(chunks.join(F.broadcast(multi), "doc_id", "left_semi"))
+        # single-chunk docs' rows stay untouched
+        singles = chunks.drop("p_day").join(F.broadcast(multi), "doc_id", "left_anti")
+        out = singles.unionByName(merged)
         # re-cluster on write: the consolidated snapshot is bucketed again,
         # so the NEXT compaction/merge over it is exchange-free even after
         # appends broke the previous clustering

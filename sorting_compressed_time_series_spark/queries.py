@@ -47,7 +47,7 @@ from .operators.rollup import (
     decode_points,
     promote,
     rollup_from_stats,
-    rollup_tier1,
+    rollup_tiers,
     with_avg,
 )
 
@@ -371,7 +371,7 @@ def rollup_1m(spark, sf_dir):
     encode per-user chunks, window partials inside the decode kernel,
     Catalyst final-aggregates (IoTDB GROUP BY ([t1,t2), 1m) semantics,
     left-closed right-open, epoch aligned)."""
-    return _tier_out(rollup_tier1(_chunks_for_rollup(spark, sf_dir), US_1M))
+    return _tier_out(rollup_tiers(_chunks_for_rollup(spark, sf_dir), [US_1M]).drop("tier"))
 
 
 @q("rollup_1h_from_1m", _rollup_oracle(US_1H))
@@ -380,7 +380,7 @@ def rollup_1h_from_1m(spark, sf_dir):
     (sum of sums, min of mins, first by earliest first_ts...) — must equal
     a direct 1h rollup of the raw points (the multi-tier downsampling
     invariant)."""
-    t1 = rollup_tier1(_chunks_for_rollup(spark, sf_dir), US_1M)
+    t1 = rollup_tiers(_chunks_for_rollup(spark, sf_dir), [US_1M]).drop("tier")
     return _tier_out(promote(t1, US_1H))
 
 
@@ -476,25 +476,6 @@ def _gapfill_frame(spark, sf_dir):
     return hourly.select(
         F.col("user_id").alias("doc_id"), (F.col("wdiv") * US_1H).alias("window_start"), "avg_q"
     )
-
-
-def gapfill_previous(spark, sf_dir):
-    """FILL(PREVIOUS) on an hourly spine (reference FillOperator /
-    identity fill)."""
-    out = gapfill(_gapfill_frame(spark, sf_dir), US_1H, "avg_q", "previous")
-    return out.select(F.col("doc_id").alias("user_id"), "window_start", "filled")
-
-
-def gapfill_linear(spark, sf_dir):
-    """FILL(LINEAR) (reference LinearFillOperator)."""
-    out = gapfill(_gapfill_frame(spark, sf_dir), US_1H, "avg_q", "linear")
-    return out.select(F.col("doc_id").alias("user_id"), "window_start", "filled")
-
-
-def gapfill_constant(spark, sf_dir):
-    """FILL(constant 0)."""
-    out = gapfill(_gapfill_frame(spark, sf_dir), US_1H, "avg_q", "constant", constant=0.0)
-    return out.select(F.col("doc_id").alias("user_id"), "window_start", "filled")
 
 
 @q(
@@ -810,39 +791,6 @@ def _minutely(spark, sf_dir, etype, alias):
     return ev.groupBy(
         "user_id", F.expr(f"(ts_us div {US_1D}) * {US_1D}").alias("m")
     ).agg(F.count("*").alias(alias))
-
-
-def time_join_inner(spark, sf_dir):
-    """InnerTimeJoinOperator: align two series on the time axis (minute
-    buckets)."""
-    c = _minutely(spark, sf_dir, "click", "n_click")
-    v = _minutely(spark, sf_dir, "view", "n_view")
-    return c.join(v, ["user_id", "m"], "inner").select(
-        "user_id", F.col("m").alias("ts_m"), "n_click", "n_view"
-    )
-
-
-def time_join_full(spark, sf_dir):
-    """FullOuterTimeJoinOperator: align-and-pad (NULL → 0 marker)."""
-    c = _minutely(spark, sf_dir, "click", "n_click")
-    v = _minutely(spark, sf_dir, "view", "n_view")
-    j = c.join(v, ["user_id", "m"], "full_outer")
-    return j.select(
-        "user_id",
-        F.col("m").alias("ts_m"),
-        F.coalesce("n_click", F.lit(0)).alias("n_click"),
-        F.coalesce("n_view", F.lit(0)).alias("n_view"),
-    )
-
-
-def time_join_left(spark, sf_dir):
-    """LeftOuterTimeJoinOperator."""
-    c = _minutely(spark, sf_dir, "click", "n_click")
-    v = _minutely(spark, sf_dir, "view", "n_view")
-    return c.join(v, ["user_id", "m"], "left").select(
-        "user_id", F.col("m").alias("ts_m"), "n_click",
-        F.coalesce("n_view", F.lit(0)).alias("n_view"),
-    )
 
 
 @q("time_joins", _JOIN_BASE + """
@@ -2166,7 +2114,7 @@ def tokens_pipeline_tiers(spark, sf_dir):
     directly, so encode→sort→decode→rollup must be value-exact end-to-end."""
     toks = _gen_tokens(spark, _tokens_docs(sf_dir))
     chunks = _flush(toks)
-    t1 = rollup_tier1(chunks, WINDOW_1S_US)
+    t1 = rollup_tiers(chunks, [WINDOW_1S_US]).drop("tier")
     return with_avg(promote(t1, US_1M))
 
 

@@ -60,8 +60,3 @@ def synth_timestamps(
         disp = ((h[idx] >> np.uint64(32)) % np.uint64(OOO_MAX_DISP)).astype(np.int64) + 1
         ts[idx] -= disp
     return ts
-
-
-def doc_index_from_id(doc_id_bytes_prefixstripped: np.ndarray) -> np.ndarray:
-    """doc 'doc0000000123' -> 123 (vectorized string → int)."""
-    return doc_id_bytes_prefixstripped.astype(np.int64)

@@ -152,26 +152,30 @@ class Warehouse:
                 for tbl in tables.values()),
         )
         shutil.rmtree(staging, ignore_errors=True)
-        w = df.write.mode("overwrite").option("parquet.block.size", 4 << 20)
-        w = w.partitionBy(slice_col, *partition_by)
-        w.parquet(staging)
-        slice_schema = df.drop(slice_col).schema.json()
-        for val, tbl in tables.items():
-            src = os.path.join(staging, f"{slice_col}={val}")
-            snap = f"snap-{self.manifest(tbl)['version'] + 1}"
-            dst = os.path.join(self.root, tbl, snap)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.isdir(src):
-                os.rename(src, dst)
-            else:
-                os.makedirs(dst, exist_ok=True)
-            wm = (watermarks or {}).get(val)
-            self._commit(tbl, snap, wm,
-                         {"op": op, "partition_by": tuple(partition_by),
-                          "bucket_by": None},
-                         schema_json=slice_schema, bucket_spec=None)
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            w = df.write.mode("overwrite").option("parquet.block.size", 4 << 20)
+            w = w.partitionBy(slice_col, *partition_by)
+            w.parquet(staging)
+            slice_schema = df.drop(slice_col).schema.json()
+            for val, tbl in tables.items():
+                src = os.path.join(staging, f"{slice_col}={val}")
+                snap = f"snap-{self.manifest(tbl)['version'] + 1}"
+                dst = os.path.join(self.root, tbl, snap)
+                shutil.rmtree(dst, ignore_errors=True)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                if os.path.isdir(src):
+                    os.rename(src, dst)
+                else:
+                    os.makedirs(dst, exist_ok=True)
+                wm = (watermarks or {}).get(val)
+                self._commit(tbl, snap, wm,
+                             {"op": op, "partition_by": tuple(partition_by),
+                              "bucket_by": None},
+                             schema_json=slice_schema, bucket_spec=None)
+        finally:
+            # the staging name depends on the table versions, so a rerun
+            # after a failed commit never reuses (or removes) this dir
+            shutil.rmtree(staging, ignore_errors=True)
 
     def append_segment(self, df: DataFrame, table: str, *,
                        partition_by: tuple[str, ...] = (), op: str = "append") -> str:

@@ -15,7 +15,7 @@ from sorting_compressed_time_series_spark.operators.rollup import (
     decode_points,
     promote,
     rollup_from_stats,
-    rollup_tier1,
+    rollup_tiers,
 )
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 
@@ -108,29 +108,33 @@ def test_points_sorted_within_doc(chunks):
 
 
 def test_tier1_rollup_matches_pandas(spark, chunks):
-    tier1 = rollup_tier1(chunks, WINDOW_1M_US).toPandas()
+    """Every tier of rollup_tiers equals a pandas group-by over the decoded
+    raw points, for nested windows and for windows that are not multiples
+    of each other (a 40 s window straddles a minute boundary)."""
     raw = decode_points(chunks).toPandas()
-    raw["window_start"] = raw.ts // WINDOW_1M_US * WINDOW_1M_US
     raw = raw.sort_values(["doc_id", "ts"], kind="stable")
-    want = raw.groupby(["doc_id", "window_start"]).agg(
-        cnt=("value", "size"),
-        sum_v=("value", "sum"),
-        min_v=("value", "min"),
-        max_v=("value", "max"),
-        first_v=("value", "first"),
-        last_v=("value", "last"),
-    )
-    got = tier1.set_index(["doc_id", "window_start"]).sort_index()
-    want = want.sort_index()
-    assert len(got) == len(want)
-    for col in ["cnt", "sum_v", "min_v", "max_v", "first_v", "last_v"]:
-        assert np.array_equal(got[col].to_numpy(), want[col].to_numpy()), col
+    for windows in ([1_000_000, WINDOW_1M_US, WINDOW_1H_US], [40_000_000, WINDOW_1M_US]):
+        tiers = rollup_tiers(chunks, windows).toPandas()
+        for t, w in enumerate(windows):
+            want = raw.assign(window_start=raw.ts // w * w).groupby(
+                ["doc_id", "window_start"]).agg(
+                cnt=("value", "size"),
+                sum_v=("value", "sum"),
+                min_v=("value", "min"),
+                max_v=("value", "max"),
+                first_v=("value", "first"),
+                last_v=("value", "last"),
+            ).sort_index()
+            got = tiers[tiers.tier == t].set_index(["doc_id", "window_start"]).sort_index()
+            assert len(got) == len(want), (windows, t)
+            for col in ["cnt", "sum_v", "min_v", "max_v", "first_v", "last_v"]:
+                assert np.array_equal(got[col].to_numpy(), want[col].to_numpy()), (windows, t, col)
 
 
 def test_tier2_promotion_composes(spark, chunks):
-    tier1 = rollup_tier1(chunks, WINDOW_1M_US)
+    tier1 = rollup_tiers(chunks, [WINDOW_1M_US]).drop("tier")
     tier2 = promote(tier1, WINDOW_1H_US).toPandas()
-    direct = rollup_tier1(chunks, WINDOW_1H_US).toPandas()
+    direct = rollup_tiers(chunks, [WINDOW_1H_US]).drop("tier").toPandas()
     a = tier2.set_index(["doc_id", "window_start"]).sort_index()
     b = direct.set_index(["doc_id", "window_start"]).sort_index()
     assert len(a) == len(b)
@@ -154,28 +158,9 @@ def test_stats_rollup_no_decode(spark, tokens, chunks):
     assert np.array_equal(got["sum_v"].to_numpy(), want["sum_v"].to_numpy())
 
 
-def test_fused_partials_equal_decode_rollup(spark, tokens):
-    from sorting_compressed_time_series_spark.operators.rollup import tier1_from_flush
-
-    fused = flush(tokens, SEED, partial_window_us=WINDOW_1M_US)
-    got = tier1_from_flush(fused).toPandas().set_index(["doc_id", "window_start"]).sort_index()
-    chunks_only = fused.filter(F.col("tier") == 0)
-    want = (
-        rollup_tier1(chunks_only, WINDOW_1M_US)
-        .toPandas()
-        .set_index(["doc_id", "window_start"])
-        .sort_index()
-    )
-    assert len(got) == len(want)
-    for col in ["cnt", "sum_v", "min_v", "max_v", "first_v", "last_v", "first_ts", "last_ts"]:
-        assert np.array_equal(got[col].to_numpy(), want[col].to_numpy()), col
-
-
 def test_rollup_tiers_fused_equals_cascade(spark, chunks):
     """The fused one-pass multi-tier rollup must equal the tier1 +
     promote() cascade at every granularity, in both modes."""
-    from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
-
     windows = [1_000_000, WINDOW_1M_US, WINDOW_1H_US]
     key = ["doc_id", "source", "window_start"]
 
@@ -184,7 +169,7 @@ def test_rollup_tiers_fused_equals_cascade(spark, chunks):
 
     for unique in (True, False):
         fused = rollup_tiers(chunks, windows, unique_doc_chunks=unique).toPandas()
-        ref1 = rollup_tier1(chunks, windows[0], unique_doc_chunks=unique)
+        ref1 = rollup_tiers(chunks, windows[:1], unique_doc_chunks=unique).drop("tier")
         refs = {0: ref1.toPandas()}
         prev = ref1
         for t, w in enumerate(windows[1:], start=1):

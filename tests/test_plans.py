@@ -65,14 +65,14 @@ def test_rollup_cascade_has_single_shuffle_per_tier(spark, tmp_path):
     from sorting_compressed_time_series_spark.operators.rollup import (
         WINDOW_1M_US,
         promote,
-        rollup_tier1,
+        rollup_tiers,
     )
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 
     path = str(tmp_path / "chunks")
     flush(generate_tokens_df(spark, 50)).write.parquet(path)
     chunks = spark.read.parquet(path)
-    t1 = rollup_tier1(chunks, 1_000_000)
+    t1 = rollup_tiers(chunks, [1_000_000]).drop("tier")
     plan = plan_of(t1, mode="simple")
     # partial+final HashAggregate around exactly one exchange
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -125,26 +125,28 @@ def test_exact_dedup_shuffles_hashes_not_text(spark):
 
 
 def test_tier1_unique_chunks_is_shuffle_free(spark, tmp_path):
-    """With one chunk per doc (single flush), rollup_tier1(unique_doc_chunks
-    =True) must plan NO exchange at all: decode partials are final and the
-    tier-1 write runs at scan parallelism."""
+    """With one chunk per doc (single flush), a single-window (tier-1)
+    rollup_tiers(unique_doc_chunks=True) must plan NO exchange at all:
+    decode partials are final and the tier-1 write runs at scan
+    parallelism."""
+    import pandas as pd
+
     from sorting_compressed_time_series_spark.operators.ingest import flush
-    from sorting_compressed_time_series_spark.operators.rollup import rollup_tier1
+    from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 
     path = str(tmp_path / "chunks")
     flush(generate_tokens_df(spark, 50)).write.parquet(path)
     chunks = spark.read.parquet(path)
-    plan = plan_of(rollup_tier1(chunks, 1_000_000, unique_doc_chunks=True), mode="simple")
+    t1 = rollup_tiers(chunks, [1_000_000], unique_doc_chunks=True).drop("tier")
+    plan = plan_of(t1, mode="simple")
     assert "Exchange" not in plan, plan
     # and it must equal the general (shuffled) path on this input
-    a = rollup_tier1(chunks, 1_000_000, unique_doc_chunks=True).toPandas()
-    b = rollup_tier1(chunks, 1_000_000).toPandas()
+    a = t1.toPandas()
+    b = rollup_tiers(chunks, [1_000_000]).drop("tier").toPandas()
     key = ["doc_id", "window_start"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)[a.columns]
-    import pandas as pd
-
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
@@ -190,7 +192,10 @@ def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
     """The fused multi-tier rollup in one-chunk-per-doc mode must be a pure
     map-only plan: no Exchange anywhere between the chunk scan and the
     per-tier partial rows (this is what lets the whole promotion cascade
-    ride a single write job in bench)."""
+    ride a single write job in bench), and on such input it must equal the
+    general (shuffled) path."""
+    import pandas as pd
+
     from sorting_compressed_time_series_spark.operators.ingest import flush
     from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
@@ -198,10 +203,47 @@ def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
     path = str(tmp_path / "chunks")
     flush(generate_tokens_df(spark, 60)).write.parquet(path)
     chunks = spark.read.parquet(path)
-    plan = plan_of(
-        rollup_tiers(chunks, [1_000_000, 60_000_000], unique_doc_chunks=True)
-    )
+    windows = [1_000_000, 60_000_000]
+    plan = plan_of(rollup_tiers(chunks, windows, unique_doc_chunks=True))
     assert "Exchange" not in plan, plan
+    a = rollup_tiers(chunks, windows, unique_doc_chunks=True).toPandas()
+    b = rollup_tiers(chunks, windows).toPandas()
+    key = ["tier", "doc_id", "window_start"]
+    a = a.sort_values(key).reset_index(drop=True)
+    b = b.sort_values(key).reset_index(drop=True)[a.columns]
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
+def test_merge_promotion_decodes_chunks_once(spark, tmp_path, monkeypatch):
+    """A merge-mode promote_all builds every tier from ONE decode: the
+    frame it commits has exactly one MapInArrow (the rollup_tiers kernel)
+    over the chunk scan, with no decode subtree repeated per union branch,
+    and every tier's manifest records the same single promote commit."""
+    from sorting_compressed_time_series_spark.plans.pipeline import Pipeline
+    from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
+    from sorting_compressed_time_series_spark.sources.warehouse import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    p = Pipeline(spark, wh, n_buckets=4)
+    p.ingest(generate_tokens_df(spark, 30), 42)
+    p.promote_all()
+    p.ingest(generate_tokens_df(spark, 10, start=25), 42, append=True)
+
+    plans = []
+    real = Warehouse.write_slices
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(plan_of(df, mode="simple"))
+        return real(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "write_slices", spy)
+    assert {e["mode"] for e in p.promote_all()} == {"merge"}
+    assert len(plans) == 1
+    phys = plans[0].split("== Physical Plan ==")[-1]
+    assert phys.count("MapInArrow") == 1, phys
+    for spec in p.tiers:
+        lineage = wh.manifest(spec.name)["lineage"]
+        assert [e["op"] for e in lineage] == ["promote", "promote"], lineage
 
 
 def test_cosine_dup_pairs_single_shuffle_no_cartesian(spark):

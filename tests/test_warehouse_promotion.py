@@ -4,6 +4,8 @@ Oracles per FIXTURES.md F3: interrupted promotion resumed from checkpoint
 must equal an uninterrupted run; post-TTL tables equal a filtered
 expectation; gap-fill modes equal pandas ffill/interp/fillna."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -14,6 +16,9 @@ from sorting_compressed_time_series_spark.operators.gapfill import gapfill
 from sorting_compressed_time_series_spark.operators.rollup import (
     WINDOW_1H_US,
     WINDOW_1M_US,
+    decode_points,
+    promote,
+    rollup_tiers,
     with_avg,
 )
 from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
@@ -166,22 +171,99 @@ def test_incremental_append_equals_oneshot(spark, tmp_path_factory):
     assert [e["mode"] for e in p2.promote_all()] == ["noop", "noop"]
 
 
-def test_fused_promote_equals_cascade(spark, tmp_path_factory, uninterrupted, monkeypatch):
-    """promote_all()'s fused full-mode fast path (ONE decode job + ONE
-    write via Warehouse.write_slices) must produce the same tier tables
-    and the same watermarks as the per-tier cascade."""
-    want, wh_fused = uninterrupted  # fixture ran the fused path (fresh wh)
-    monkeypatch.setenv("SPARK_GRAFT_NO_FUSED_PROMOTE", "1")
-    wh = Warehouse(str(tmp_path_factory.mktemp("wh_cascade")))
-    p = Pipeline(spark, wh, _tiers())
-    p.ingest(generate_tokens_df(spark, N_DOCS, SEED), SEED)
-    summary = p.promote_all()
-    assert all(e["mode"] == "full" for e in summary)
+def test_fused_promote_equals_cascade(spark, uninterrupted):
+    """promote_all() (ONE rollup_tiers decode + ONE write via
+    Warehouse.write_slices) must produce the same tier tables as the
+    operator-level reference cascade rollup_tiers(chunks, [w0]) → promote(),
+    with each watermark at the end of the tier's last window."""
+    want, wh = uninterrupted
+    chunks = wh.read(spark, "chunks_tier0")
+    data_max = chunks.agg(F.max("max_ts")).collect()[0][0]
+    ref = None
     for s in _tiers():
-        got = _collect(wh.read(spark, s.name))
-        pd.testing.assert_frame_equal(got[want[s.name].columns], want[s.name],
+        ref = (rollup_tiers(chunks, [s.window_us]).drop("tier") if ref is None
+               else promote(ref, s.window_us))
+        pd.testing.assert_frame_equal(want[s.name], _collect(ref)[want[s.name].columns],
                                       check_dtype=False)
-        assert wh.watermark(s.name) == wh_fused.watermark(s.name)
+        assert wh.watermark(s.name) == (data_max // s.window_us + 1) * s.window_us
+
+
+def test_non_nested_tiers_match_raw_points(spark, tmp_path_factory):
+    """Tiers whose windows are not multiples of each other (40 s, then
+    1 min): every promoted tier must equal a pandas group-by over the raw
+    points. A 1-min tier cascaded from the 40-s tier would be wrong: a
+    40-s window that straddles a minute boundary lands whole in one
+    minute."""
+    tiers = [TierSpec("tier1_40s", 40_000_000), TierSpec("tier2_1m", WINDOW_1M_US)]
+    wh = Warehouse(str(tmp_path_factory.mktemp("wh_nonnested")))
+    p = Pipeline(spark, wh, tiers)
+    p.ingest(generate_tokens_df(spark, 30, SEED), SEED)
+    assert [e["mode"] for e in p.promote_all()] == ["full", "full"]
+    raw = decode_points(wh.read(spark, "chunks_tier0")).toPandas()
+    raw = raw.sort_values(["doc_id", "ts"], kind="stable")
+    for spec in tiers:
+        w = spec.window_us
+        want = raw.assign(window_start=raw.ts // w * w).groupby(
+            ["doc_id", "window_start"]).agg(
+            cnt=("value", "size"),
+            sum_v=("value", "sum"),
+            min_v=("value", "min"),
+            max_v=("value", "max"),
+            first_v=("value", "first"),
+            last_v=("value", "last"),
+        ).reset_index()
+        got = _collect(wh.read(spark, spec.name))
+        assert len(got) == len(want), spec.name
+        for col in ["cnt", "sum_v", "min_v", "max_v", "first_v", "last_v"]:
+            assert np.array_equal(got[col].to_numpy(), want[col].to_numpy()), (spec.name, col)
+
+
+@pytest.mark.parametrize("mode", ["full", "merge"])
+def test_resume_after_failed_tier_commit(spark, tmp_path_factory, monkeypatch, mode):
+    """A crash between write_slices' per-tier commits (injected on the
+    second tier table): the first tier is committed, the second is not and
+    appends stay pending; a rerun of promote_all must give the tier tables
+    and watermarks of an uninterrupted run, and clear the pending appends
+    only once every tier has committed."""
+    tiers = _tiers()
+    real_commit = Warehouse._commit
+
+    def failing_commit(self, table, *args, **kwargs):
+        if table == tiers[1].name:
+            raise OSError("injected commit failure")
+        return real_commit(self, table, *args, **kwargs)
+
+    def run(fail: bool) -> Warehouse:
+        wh = Warehouse(str(tmp_path_factory.mktemp(f"wh_{mode}_{fail}")))
+        p = Pipeline(spark, wh, tiers)
+        p.ingest(generate_tokens_df(spark, 50, SEED), SEED)
+        if mode == "merge":
+            p.promote_all()
+            # docs 40..49 are delivered again, 50..59 are new
+            p.ingest(generate_tokens_df(spark, 20, SEED, start=40), SEED, append=True)
+        if fail:
+            before = [wh.manifest(s.name) for s in tiers]
+            with monkeypatch.context() as m:
+                m.setattr(Warehouse, "_commit", failing_commit)
+                with pytest.raises(OSError, match="injected"):
+                    p.promote_all()
+            assert wh.manifest(tiers[0].name)["version"] == before[0]["version"] + 1
+            assert wh.manifest(tiers[1].name) == before[1]
+            assert bool(wh.pending_appends("chunks_tier0")) == (mode == "merge")
+            assert not os.listdir(os.path.join(wh.root, "_staging"))
+        summary = p.promote_all()
+        if fail:
+            want_modes = ["merge", "merge"] if mode == "merge" else ["noop", "full"]
+            assert [e["mode"] for e in summary] == want_modes
+        assert not wh.pending_appends("chunks_tier0")
+        return wh
+
+    ref, got = run(fail=False), run(fail=True)
+    for s in tiers:
+        a = _collect(ref.read(spark, s.name))
+        b = _collect(got.read(spark, s.name))
+        pd.testing.assert_frame_equal(a, b[a.columns], check_dtype=False)
+        assert got.watermark(s.name) == ref.watermark(s.name)
 
 
 def test_pipeline_compact_after_append(spark, tmp_path_factory):
