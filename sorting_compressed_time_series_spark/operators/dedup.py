@@ -25,7 +25,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 NORMALIZE = "lower(regexp_replace(trim(text), '\\\\s+', ' '))"
 
@@ -295,18 +295,18 @@ def minhash_lsh_candidates(
     sig = minhash_signatures(docs, num_perm, n)
     r = num_perm // bands
     # one pass: explode an array of (band, bucket) structs instead of a
-    # bands-way union (each union arm re-scanned the signature frame)
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(bidx).alias("band"),
-            F.xxhash64(*[F.col(f"mh{bidx * r + j}") for j in range(r)]).alias("bucket"),
-        )
+    # bands-way union (each union arm re-scanned the signature frame).
+    # Both arrays are parsed from SQL text: built from Column calls they
+    # take ~100 py4j round trips, ~0.1 s of driver time per query.
+    band_structs = ", ".join(
+        f"named_struct('band', {bidx}, 'bucket', xxhash64("
+        + ", ".join(f"mh{bidx * r + j}" for j in range(r)) + "))"
         for bidx in range(bands)
-    ])
+    )
     sig = sig.select(
         "doc_id",
-        F.array(*[F.col(f"mh{i}") for i in range(num_perm)]).alias("sig"),
-        band_structs.alias("bbs"),
+        F.expr(f"array({', '.join(f'mh{i}' for i in range(num_perm))})").alias("sig"),
+        F.expr(f"array({band_structs})").alias("bbs"),
     ).cache()
     buckets = sig.select("doc_id", F.explode("bbs").alias("bb")).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
@@ -450,6 +450,32 @@ def simhash_pairs(
     return out
 
 
+def _local_components(spark: SparkSession, edges: pa.Table) -> DataFrame:
+    """dup_groups on the driver: union-find over an (a, b) Arrow edge table,
+    returned as an Arrow-backed (doc_id, group_id) frame."""
+    parent: dict = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(edges.column("a").to_pylist(), edges.column("b").to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union-by-min keeps each root the component minimum, so
+            # find(v) is exactly the "smallest doc_id reachable" label
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(nodes, pa.int64()),
+        "group_id": pa.array([find(v) for v in nodes], pa.int64()),
+    }))
+
+
 def dup_groups(pairs: DataFrame, max_iters: int = 50,
                local_threshold: int | None = 5_000_000) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, group_id) with
@@ -461,52 +487,36 @@ def dup_groups(pairs: DataFrame, max_iters: int = 50,
     as DataFrame self-joins — O(log n) rounds on pathological chains,
     2-3 rounds on the star/clique shapes dedup actually produces. Each
     round is two grouped min-joins; the driver loop only checks a
-    convergence COUNT per round (no data collected). At 10^12 docs the
+    convergence SUM per round (no data collected). At 10^12 docs the
     edge set is the (already linear) candidate-pair output, orders of
     magnitude smaller than the corpus, and every round's shuffle is on
     fixed-width (long, long) rows.
 
     The iteration state is localCheckpoint'ed each round: the lineage
-    would otherwise double per iteration and the convergence count
-    re-execute the whole chain."""
+    would otherwise double per iteration and the convergence sum
+    re-execute the whole chain.
+
+    Edge sets of at most ``local_threshold`` rows skip the rounds: one
+    bounded Arrow fetch and a driver union-find (see below)."""
     # undirected edge list, self-loops dropped, as (node, neighbor) both ways
     e = pairs.select(F.col("a").cast("long"), F.col("b").cast("long")).filter(
         F.col("a") != F.col("b")
     )
     # Size-gated LOCAL fast path: near-dup pair sets are the designed-
     # linear output of the candidate stages — orders of magnitude smaller
-    # than the corpus — and every caller hands them in already
-    # localCheckpoint-ed, so the count is one cheap job. Below the
-    # threshold (default 5M edges ~= 80 MB in flight; same small-side
-    # stance as incremental_dedup's broadcast batch) a driver union-find
-    # replaces ~4 log-rounds x 2 actions of fixed job overhead with one
-    # collect; the alternating-star distributed rounds below remain the
-    # unconditional path for bigger edge sets (pass local_threshold=None
-    # or 0 to force them — the pytest equivalence suite does).
-    if local_threshold and e.count() <= local_threshold:
-        rows = e.collect()
-        parent: dict = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in rows:
-            a, b = r[0], r[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union-by-min keeps each root the component minimum, so
-                # find(v) is exactly the "smallest doc_id reachable" label
-                parent[max(ra, rb)] = min(ra, rb)
-        data = [(v, find(v)) for v in parent]
-        spark = pairs.sparkSession
-        if not data:
-            return spark.createDataFrame([], "doc_id long, group_id long")
-        return spark.createDataFrame(data, "doc_id long, group_id long")
+    # than the corpus. ONE bounded action fetches at most local_threshold+1
+    # edges as Arrow (default 5M edges ~= 80 MB in flight; same small-side
+    # stance as incremental_dedup's broadcast batch), which is also the
+    # driver's memory bound: at or below the threshold a driver union-find
+    # replaces ~4 log-rounds x 2 actions of fixed job overhead, and its
+    # result goes back as an Arrow-backed local relation (no pickled
+    # rows). Bigger edge sets take the alternating-star distributed rounds
+    # below (pass local_threshold=None or 0 to force them — the pytest
+    # equivalence suite does).
+    if local_threshold:
+        head = e.limit(local_threshold + 1).toArrow()
+        if head.num_rows <= local_threshold:
+            return _local_components(pairs.sparkSession, head)
     # materialize the symmetrized edge list once: every contraction round
     # joins against it, and without the checkpoint the union+distinct
     # shuffle (the dominant exchange) re-executes per round

@@ -21,6 +21,8 @@ Floats: aggregates that accumulate doubles in parallel are quantized
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -28,6 +30,7 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql.types import StructType
 
 from .codecs.chunk import (
     CODEC_DELTA,
@@ -58,8 +61,29 @@ US_1H = WINDOW_1H_US
 Q = "CAST(floor(value * 1000000) AS BIGINT)"
 
 
+@functools.lru_cache(maxsize=64)
+def _parquet_schema(path: str, size: int, mtime_ns: int) -> StructType:
+    """The schema Spark infers for one version of a parquet file. Inference
+    is a Spark job of its own; the file's (path, size, mtime) is the key, so
+    a rewritten file is inferred again. The schema depends on the file
+    alone, so every session shares the entry."""
+    return SparkSession.active().read.parquet(path).schema
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local file's schema once
+    per file version: later reads pass the cached schema and launch no
+    job. Directories and non-local paths are read (and inferred) as is."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    schema = _parquet_schema(path, st.st_size, st.st_mtime_ns)
+    return spark.read.schema(schema).parquet(path)
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/events.parquet")
     # parquet timestamp[us] arrives as TIMESTAMP_NTZ; session TZ is pinned to
     # UTC so the cast matches DuckDB's naive epoch_us exactly
     return df.withColumn(
@@ -73,13 +97,13 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the testdata table is a single small parquet file → a 1-partition
     # scan would run the (CPU-heavy) normalize/shingle expressions nearly
     # single-threaded; production corpora arrive in many files and skip this
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+    return _read_parquet(spark, f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -1933,8 +1957,6 @@ def _tokens_docs(sf_dir: str) -> int:
     query grew 10×. Metadata-only rowcount; cached per dir."""
     if sf_dir not in _TOKENS_DOCS_CACHE:
         try:
-            import os
-
             import pyarrow.parquet as pq
 
             p = f"{sf_dir}/events.parquet"

@@ -11,6 +11,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of host RAM, capped at 48g, as a JVM size string; 48g when the
+    host's RAM cannot be read (``meminfo`` in the /proc/meminfo format)."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{min(kb // 2048, 48 * 1024)}m"
+
+
 def get_spark(
     app: str = "spark-tsrollup",
     cores: int | None = None,
@@ -44,7 +55,10 @@ def get_spark(
         # bigger Arrow batches amortize the Python worker round trip for the
         # vectorized codec kernels (whole-batch encode)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # a heap larger than the host's RAM fails late and far from its
+        # cause; SPARK_DRIVER_MEM overrides the derived default
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # token corpora are dense (≈4 B/token on disk): the 128 MB default

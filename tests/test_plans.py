@@ -324,3 +324,45 @@ def test_quality_topp_joins_broadcast_cutoffs_no_corpus_sort(spark):
     assert rn_windows, plan
     for l in rn_windows:
         assert "stratum" in l and "quality" in l, l
+
+
+def test_input_schema_is_inferred_once_per_file_version(spark, tmp_path):
+    """The registry's input reader infers a parquet file's schema once per
+    file version: later reads launch no Spark job, a rewritten file is
+    inferred again, and two paths never share a cached schema."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sorting_compressed_time_series_spark.queries import _read_parquet
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64()), "v": [0.5, 1.5]}), path)
+    assert _read_parquet(spark, path).schema == spark.read.parquet(path).schema
+
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-once-read", "cached schema read", False)
+    try:
+        again = _read_parquet(spark, path)
+        jobs = sc.statusTracker().getJobIdsForGroup("schema-once-read")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert again.schema == spark.read.parquet(path).schema
+
+    pq.write_table(pa.table({"k": pa.array([3], pa.int64()), "v": [2.5], "w": ["x"]}), path)
+    rewritten = _read_parquet(spark, path)
+    assert rewritten.schema == spark.read.parquet(path).schema
+    assert [tuple(r) for r in rewritten.collect()] == [(3, 2.5, "x")]
+
+    # same size and mtime, different path: the path alone tells them apart
+    a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"a": pa.array([1], pa.int64())}), a)
+    pq.write_table(pa.table({"b": pa.array([1], pa.int64())}), b)
+    ns = os.stat(a).st_mtime_ns
+    os.utime(a, ns=(ns, ns))
+    os.utime(b, ns=(ns, ns))
+    assert os.stat(a).st_size == os.stat(b).st_size
+    assert _read_parquet(spark, a).schema.names == ["a"]
+    assert _read_parquet(spark, b).schema.names == ["b"]

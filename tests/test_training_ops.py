@@ -298,22 +298,49 @@ def _uf_components(pairs):
     return {v: find(v) for v in list(parent)}
 
 
-@pytest.mark.parametrize("shape", ["chain", "cliques", "mixed"])
-def test_dup_groups_matches_union_find(spark, shape):
+_DUP_SHAPES = {
+    "chain": [(i, i + 1) for i in range(60)],
+    "cliques": [(10 * g + i, 10 * g + j)
+                for g in range(5) for i in range(4) for j in range(i + 1, 4)],
+    "mixed": [(0, 50), (50, 3), (7, 9), (9, 7), (100, 2), (2, 0), (33, 33)],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("shape,threshold", [
+    pytest.param("chain", "default", id="chain"),
+    pytest.param("cliques", "default", id="cliques"),
+    pytest.param("mixed", "default", id="mixed"),
+    pytest.param("empty", "default", id="empty"),
+    pytest.param("chain", "at", id="chain-at_threshold"),
+    pytest.param("chain", "over", id="chain-over_threshold"),
+    pytest.param("mixed", "at", id="mixed-at_threshold"),
+    pytest.param("mixed", "over", id="mixed-over_threshold"),
+])
+def test_dup_groups_matches_union_find(spark, shape, threshold):
     """Alternating-star CC == union-find on chains (worst case for round
-    count), cliques (the shape dedup actually produces), and a mix with
-    shared-min collisions."""
-    if shape == "chain":
-        pairs = [(i, i + 1) for i in range(60)]
-    elif shape == "cliques":
-        pairs = [(10 * g + i, 10 * g + j)
-                 for g in range(5) for i in range(4) for j in range(i + 1, 4)]
-    else:
-        pairs = [(0, 50), (50, 3), (7, 9), (9, 7), (100, 2), (2, 0), (33, 33)]
-    want = _uf_components([(a, b) for a, b in pairs if a != b])
+    count), cliques (the shape dedup actually produces), a mix with
+    shared-min collisions, and no pairs at all. ``at``/``over`` set
+    local_threshold to exactly / one below the edge count (self-loops
+    dropped): the first must take the driver path, whose result is an
+    Arrow-backed local relation (no pickled-row scan), the second the
+    distributed rounds, whose result is a checkpointed RDD scan."""
+    pairs = _DUP_SHAPES[shape]
+    edges = [(a, b) for a, b in pairs if a != b]
+    want = _uf_components(edges)
+    kw = {"at": {"local_threshold": len(edges)},
+          "over": {"local_threshold": len(edges) - 1}}.get(threshold, {})
     df = spark.createDataFrame(pairs, "a long, b long")
-    got = {r.doc_id: r.group_id for r in DD.dup_groups(df).toLocalIterator()}
+    out = DD.dup_groups(df, **kw)
+    assert out.schema.simpleString() == "struct<doc_id:bigint,group_id:bigint>"
+    got = {r.doc_id: r.group_id for r in out.toLocalIterator()}
     assert got == want
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    if threshold == "over":
+        assert "ExistingRDD" in plan, plan
+    else:
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
 
 
 def test_dedup_keep_list_end_to_end(spark, docs):
@@ -469,11 +496,7 @@ def test_dup_groups_distributed_path_matches_local(spark, shape):
     """local_threshold=0 forces the alternating-star distributed rounds;
     they must produce the identical component labeling as the size-gated
     local union-find fast path (the default at these sizes)."""
-    if shape == "chain":
-        pairs = [(i, i + 1) for i in range(60)]
-    else:
-        pairs = [(10 * g + i, 10 * g + j)
-                 for g in range(5) for i in range(4) for j in range(i + 1, 4)]
+    pairs = _DUP_SHAPES[shape]
     df = spark.createDataFrame(pairs, "a long, b long")
     local = {r.doc_id: r.group_id for r in DD.dup_groups(df).toLocalIterator()}
     dist = {r.doc_id: r.group_id

@@ -1,84 +1,79 @@
-"""Stage-level profile of registry queries via the Spark UI REST API.
+"""Per-query Spark jobs, tasks, CPU and shuffle bytes from Spark's event log.
 
-Usage: python tools/profile_query.py <query> [query ...]
+Usage: python tools/profile_query.py <data_dir> [query ...]
 
-Runs each query (same `.count()` methodology as bench.py) on a UI-enabled
-session, then prints per-job and per-stage wall / task time / shuffle
-bytes so the expensive stage is visible without a browser (guide §7.1).
+``data_dir`` holds the registry's input tables (``events``, ``documents``,
+``embeddings`` parquet; ``perfbench.regdata.write_tables`` writes a set).
+Without query names it profiles the benchmark's ``registry`` entries.
+
+Each query runs twice, its output written to the noop sink as the benchmark
+does. The first pass warms the session (Python workers, cached schemas) and
+is not reported. The second pass tags each query's jobs with
+``setJobGroup``; after the session stops, the local event log is read back
+and one line per query shows its wall, jobs, tasks, executor CPU and
+shuffle bytes written, followed by the pass total. No Spark UI and no
+network are involved.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
-sys.path.insert(0, ".")
-
-
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
-    names = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    if len(sys.argv) < 2:
+        print(__doc__)
+        return 2
+    data_dir, names = sys.argv[1], sys.argv[2:]
 
+    from perfbench.trace import event_log_conf, read_event_log
     from sorting_compressed_time_series_spark.queries import SPARK_QUERIES
     from sorting_compressed_time_series_spark.session import get_spark
 
-    spark = get_spark(app="profile", cores=cpus, shuffle_partitions=max(cpus, 8),
-                      extra={"spark.ui.enabled": "true"})
-    # warmup: fork workers + warehouse plans (mirror bench.py's sweep)
-    from sorting_compressed_time_series_spark.operators.ingest import flush
-    from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
-
-    n = spark.sparkContext.defaultParallelism * 20
-    flush(generate_tokens_df(spark, n)).write.mode("overwrite").format("noop").save()
+    if not names:
+        from perfbench.workloads import REGISTRY_RUN
+        names = list(REGISTRY_RUN)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    log_dir = tempfile.mkdtemp(prefix="profile-events-")
     try:
-        SPARK_QUERIES["tokens_pipeline_tiers"](spark, "/root/testdata/sf0.001").count()
-    except Exception:  # noqa: BLE001
-        pass
+        spark = get_spark(app="profile", cores=cores, shuffle_partitions=cores,
+                          extra=event_log_conf(log_dir))
+        sc = spark.sparkContext
 
-    base = spark.sparkContext.uiWebUrl + "/api/v1/applications/" + spark.sparkContext.applicationId
+        def run(name: str) -> None:
+            SPARK_QUERIES[name](spark, data_dir).write.mode("overwrite").format("noop").save()
+
+        for name in names:
+            run(name)
+        walls = {}
+        for name in names:
+            sc.setJobGroup(f"profile:{name}", name, False)
+            t0 = time.perf_counter()
+            run(name)
+            walls[name] = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.stop()
+        jobs = read_event_log(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+    rows = {}
     for name in names:
-        fn = SPARK_QUERIES[name]
-        jobs_before = {j["jobId"] for j in _get(base + "/jobs")}
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        wall = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
-        time.sleep(0.3)
-        jobs = [j for j in _get(base + "/jobs") if j["jobId"] not in jobs_before]
-        stages = {s["stageId"]: s for s in _get(base + "/stages")}
-        print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
-        for j in sorted(jobs, key=lambda x: x["jobId"]):
-            sub = json.loads(json.dumps(j.get("submissionTime", "")))
-            comp = j.get("completionTime", "")
-            print(f"  job {j['jobId']}: {j['numTasks']} tasks  "
-                  f"[{sub[11:23]} -> {str(comp)[11:23]}]")
-            for sid in sorted(j.get("stageIds", [])):
-                s = stages.get(sid)
-                if not s or s.get("status") == "SKIPPED":
-                    continue
-                dur = ""
-                if s.get("firstTaskLaunchedTime") and s.get("completionTime"):
-                    dur = f"wall={s['completionTime'][11:23]}"
-                print(
-                    f"    stage {sid:4d} {s['status']:9s} tasks={s['numCompleteTasks']:4d} "
-                    f"exec={s.get('executorRunTime', 0)/1000:8.2f}s "
-                    f"cpu={s.get('executorCpuTime', 0)/1e9:8.2f}s "
-                    f"in={s.get('inputBytes', 0)>>10:8d}K "
-                    f"sh_r={s.get('shuffleReadBytes', 0)>>10:7d}K "
-                    f"sh_w={s.get('shuffleWriteBytes', 0)>>10:7d}K  "
-                    f"{s.get('name', '')[:60]} {dur}"
-                )
-    spark.stop()
+        mine = [j for j in jobs if j["group"] == f"profile:{name}"]
+        rows[name] = (walls[name], len(mine), int(sum(j["tasks"] for j in mine)),
+                      sum(j["cpu_s"] for j in mine),
+                      sum(j["shuffle_write_bytes"] for j in mine) / 1024)
+    rows["TOTAL"] = tuple(map(sum, zip(*rows.values())))
+    print(f"{'query':28s} {'wall_s':>7s} {'jobs':>5s} {'tasks':>6s} {'cpu_s':>7s} {'shuffle_w_KB':>12s}")
+    for label, (wall, njobs, tasks, cpu_s, shuffle_kb) in rows.items():
+        print(f"{label:28s} {wall:7.3f} {njobs:5d} {tasks:6d} {cpu_s:7.2f} {shuffle_kb:12.1f}")
     return 0
 
 
